@@ -194,12 +194,11 @@ def write_tables(out_dir: str, seed: int) -> None:
 
 SCHEDULE_ROWS = 2000
 AIRPORT_ROWS = 60
-EVENT_MONTHS = ("2024-01", "2024-02", "2024-03")
-EVENT_ROWS_PER_FILE = 250
-#: read_events_stream admits 8 files per trigger; one month's chunk
-#: files fill exactly one trigger, so each micro-batch owns its month
-#: partition in the overwrite-per-batch sink.
-FILES_PER_MONTH = 8
+#: Events arrive in time order over [EVENT_START, EVENT_END) and are cut
+#: into files by size, not by month, as an extract feed would drop them.
+EVENT_START, EVENT_END = "2024-01-01", "2024-04-01"
+EVENT_FILES = 25
+EVENT_ROWS_PER_FILE = 240
 
 
 def _airport_code(i: int) -> str:
@@ -267,36 +266,37 @@ def write_consume_inputs(out_dir: str, seed: int) -> dict:
 
     ev_dir = os.path.join(out_dir, "events")
     os.makedirs(ev_dir)
-    event_id = 0
+    n_ev = EVENT_FILES * EVENT_ROWS_PER_FILE
+    start = np.datetime64(EVENT_START, "us")
+    span = np.datetime64(EVENT_END, "us") - start
+    ts = start + np.sort(rng.integers(0, span.astype(np.int64), n_ev)).astype(
+        "timedelta64[us]")
     mtime = 1_700_000_000
-    for month in EVENT_MONTHS:
-        start = np.datetime64(f"{month}-01", "us")
-        span = (np.datetime64(f"{month}-01", "M") + 1).astype("datetime64[us]") - start
-        for f in range(FILES_PER_MONTH):
-            k = EVENT_ROWS_PER_FILE
-            offsets_us = np.sort(rng.integers(0, span.astype(np.int64), k))
-            table = pa.table(
-                {
-                    "event_id": pa.array(np.arange(event_id, event_id + k), pa.int64()),
-                    "ts": pa.array(start + offsets_us.astype("timedelta64[us]"),
-                                   pa.timestamp("us")),
-                    "user_id": pa.array(rng.integers(0, 50, k), pa.int64()),
-                    "event_type": list(rng.choice(EVENT_TYPES, k)),
-                    "value": np.round(rng.exponential(50.0, k), 2),
-                    "props": [f'{{"k": {v}}}' for v in rng.integers(0, 100, k)],
-                }
-            )
-            event_id += k
-            path = os.path.join(ev_dir, f"chunk-{month}-{f}.parquet")
-            pq.write_table(table, path)
-            # The file source admits files in modification-time order.
-            mtime += 10
-            os.utime(path, (mtime, mtime))
+    for f in range(EVENT_FILES):
+        rows = slice(f * EVENT_ROWS_PER_FILE, (f + 1) * EVENT_ROWS_PER_FILE)
+        k = EVENT_ROWS_PER_FILE
+        table = pa.table(
+            {
+                "event_id": pa.array(np.arange(n_ev)[rows], pa.int64()),
+                "ts": pa.array(ts[rows], pa.timestamp("us")),
+                "user_id": pa.array(rng.integers(0, 50, k), pa.int64()),
+                "event_type": list(rng.choice(EVENT_TYPES, k)),
+                "value": np.round(rng.exponential(50.0, k), 2),
+                "props": [f'{{"k": {v}}}' for v in rng.integers(0, 100, k)],
+            }
+        )
+        path = os.path.join(ev_dir, f"chunk-{f:03d}.parquet")
+        pq.write_table(table, path)
+        # The file source admits files in modification-time order.
+        mtime += 10
+        os.utime(path, (mtime, mtime))
+    months, counts = np.unique(ts.astype("datetime64[M]").astype(str), return_counts=True)
     return {
         "schedule_rows": n,
         "airport_rows": AIRPORT_ROWS,
-        "event_rows": event_id,
-        "event_rows_by_month": {m: FILES_PER_MONTH * EVENT_ROWS_PER_FILE for m in EVENT_MONTHS},
+        "event_rows": n_ev,
+        "event_files": EVENT_FILES,
+        "event_rows_by_month": {m: int(c) for m, c in zip(months, counts)},
         "legs": legs,
     }
 

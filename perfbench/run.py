@@ -1,13 +1,17 @@
 """End-to-end and per-layer benchmark of the flirt_consume_spark engine.
 
-    python3 perfbench/run.py --workload scan_query --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload scan_query --seed 1 --seconds 30 --trace 0
 
 One Spark driver process at ``local[<cores>]`` runs one workload (see
 ``workloads.py`` and ``BENCHMARK.json``) from inputs generated from
 ``--seed``. Set-up writes the inputs, starts Spark and runs every
-operation once with its output checked, which is also the warm-up. The
-timed phase then repeats the workload's fixed set of operations a number
-of times set by ``--seconds`` (see ``timed_passes``).
+operation once, untimed and checked, which is also the warm-up: the
+JVM's compiled code still speeds up for tens of seconds after start, and
+the warm-up keeps the steepest part of that out of the timed passes.
+The timed phase then repeats the workload's fixed set of operations a fixed
+number of times (``passes`` in ``workloads.py``), about ``--seconds``
+seconds on a 4-core host; the count does not depend on host speed, so
+every run has the same samples and its tail sits at the same percentile.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` traces every
 second pass and reports the per-layer metrics of the traced passes, with
@@ -38,9 +42,9 @@ import tempfile  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("scan_query", "consume_ingest")
-#: The tail is the sample with 10 beyond it; from 21 samples on it is
-#: never below the median.
-MIN_SAMPLES = 21
+#: The tail is the sample with 10 beyond it, never reported below the
+#: median; MIN_SAMPLES samples put it at p75 or above.
+MIN_SAMPLES = 40
 TAIL_BEYOND = 10
 DRIVER_MEMORY = "1g"
 
@@ -52,7 +56,10 @@ END_TO_END = {
     "ingest_rows_per_s": "rows/s",
     "peak_rss_mb": "MB",
 }
-OPERATOR_MODULES = ("dedup", "similarity", "retrieval", "scale")
+#: Operator modules the kept workloads reach (the shapes and relational
+#: keys call operators.scale); dedup, similarity and retrieval are only
+#: reached by the dedup keys, which no workload runs.
+OPERATOR_MODULES = ("scale",)
 
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
@@ -108,17 +115,11 @@ def tail(samples: list[float]) -> tuple[float, float, float]:
     return p50, max(s[k - 1], p50), 100.0 * k / len(s)
 
 
-def timed_passes(workload, ctx, seconds: int, trace: bool) -> list[dict]:
-    """Run the workload's fixed set of operations as many whole times as
-    its nominal pass time fits in ``seconds``, and at least often enough
-    for MIN_SAMPLES latencies. The count depends only on the arguments,
-    so every run of a workload has the same samples and its tail sits at
-    the same percentile. With ``trace``, every second pass is traced and
-    there are at least two."""
-    count = max(round(seconds / workload.pass_s),
-                -(-MIN_SAMPLES // workload.samples_per_pass), 1 + trace)
+def timed_passes(workload, ctx, trace: bool) -> list[dict]:
+    """Run the workload's fixed set of operations ``workload.passes``
+    times. With ``trace``, every second pass is traced."""
     passes: list[dict] = []
-    for i in range(count):
+    for i in range(workload.passes):
         traced = trace and i % 2 == 1
         if traced:
             ctx.set_traced(True)
@@ -139,8 +140,7 @@ def end_to_end(passes: list[dict], setup_s: float, rss_mb: float) -> tuple[dict,
         "wall_s": statistics.median(p["wall_s"] for p in passes),
         "query_p50_s": p50,
         "query_tail_s": tail_s,
-        "ingest_rows_per_s": (sum(p["rows"] for p in passes)
-                              / sum(p["rows_s"] for p in passes)),
+        "ingest_rows_per_s": statistics.median(p["rows"] / p["rows_s"] for p in passes),
         "peak_rss_mb": rss_mb,
     }
     return values, {"query_tail_percentile": round(pct, 2),
@@ -216,7 +216,6 @@ def per_layer(all_passes: list[dict], tracer, stream_probe,
         "streaming.trigger_ms": (stream_sum("triggerExecution"), "ms"),
         "session.get_spark_s": (get_spark_s, "s"),
         "trace.spans": (len(spans) / n, "count"),
-        "trace.untraced_wall_s": (wall_untraced, "s"),
         "trace.traced_wall_s": (wall, "s"),
         "trace.overhead_share": (wall / wall_untraced - 1.0, "ratio"),
     })
@@ -241,7 +240,7 @@ def run(args: argparse.Namespace, run_dir: str) -> tuple[dict, dict]:
         workload = wl.WORKLOADS[args.workload]()
         inputs = workload.setup(ctx)
         setup_s = time.perf_counter() - T_START
-        passes = timed_passes(workload, ctx, args.seconds, bool(args.trace))
+        passes = timed_passes(workload, ctx, bool(args.trace))
         rss = {"jvm_hwm_mb": vm_hwm_mb(jvm_pid), "python_hwm_mb": vm_hwm_mb("self")}
         rss_mb = sum(rss.values())
         provenance = {
