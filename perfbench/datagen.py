@@ -192,12 +192,20 @@ def write_tables(out_dir: str, seed: int) -> None:
 
 # --- monthly consume inputs ----------------------------------------------
 
-SCHEDULE_ROWS = 2000
+#: The extract and the events cover the same three months.
+MONTHS = ("2024-01", "2024-02", "2024-03")
+#: Schedule rows per month, and how many of them consuming must drop
+#: (zero seats, freight, codeshare, unknown origin, unknown destination).
+#: The rest each run three weeks on five weekdays: exactly 15 legs.
+SCHEDULE_ROWS_PER_MONTH = 700
+DROPPED_PER_MONTH = {"zero_seats": 28, "freight": 63, "codeshare": 98,
+                     "unknown_orig": 3, "unknown_dest": 3}
+SPAN_DAYS = 21
 AIRPORT_ROWS = 60
-#: Events arrive in time order over [EVENT_START, EVENT_END) and are cut
-#: into files by size, not by month, as an extract feed would drop them.
-EVENT_START, EVENT_END = "2024-01-01", "2024-04-01"
-EVENT_FILES = 25
+#: Events arrive in time order and are cut into files by size, not by
+#: month, as an extract feed would drop them: a month's events span
+#: files, and files span months.
+EVENT_ROWS_PER_MONTH = 2000
 EVENT_ROWS_PER_FILE = 240
 
 
@@ -227,33 +235,50 @@ def write_consume_inputs(out_dir: str, seed: int) -> dict:
             }
             fh.write(json.dumps(row) + "\n")
 
-    n = SCHEDULE_ROWS
-    # Two codes past the dimension are dangling airport references.
+    # Every month gets the same rows, so every month, and any choice of
+    # re-consumed months, lands the same number of legs whatever the seed.
+    # A leg stays in its schedule's month: its days keep one day clear of
+    # the month's ends, and the UTC shift of a departure is under a day.
     known = {c: int(o) for c, o in zip(codes, offsets)}
-    pool = codes + [_airport_code(AIRPORT_ROWS), _airport_code(AIRPORT_ROWS + 1)]
-    eff = rng.integers(0, 60, n)
-    day0 = pd.to_datetime("2024-01-01")
+    unknown = [_airport_code(AIRPORT_ROWS), _airport_code(AIRPORT_ROWS + 1)]
+    per_month = SCHEDULE_ROWS_PER_MONTH
+    n = per_month * len(MONTHS)
+    kept = per_month - sum(DROPPED_PER_MONTH.values())
+    kind = np.concatenate([
+        rng.permutation(np.repeat(["kept", *DROPPED_PER_MONTH],
+                                  [kept, *DROPPED_PER_MONTH.values()]))
+        for _ in MONTHS
+    ])
+    first = [pd.Timestamp(f"{m}-01") for m in MONTHS]
+    eff = pd.to_datetime(np.concatenate([
+        np.datetime64(f.date()) + rng.integers(1, f.days_in_month - SPAN_DAYS, per_month)
+        for f in first
+    ]))
 
     def hhmm() -> list[str]:
         return [f"{h:02d}:{m:02d}"
                 for h, m in zip(rng.integers(0, 24, n), rng.integers(0, 12, n) * 5)]
 
+    orig, dest = rng.choice(codes, n), rng.choice(codes, n)
+    orig = np.where(kind == "unknown_orig", rng.choice(unknown, n), orig)
+    dest = np.where(kind == "unknown_dest", rng.choice(unknown, n), dest)
     sched = pd.DataFrame(
         {
             "sched_id": np.arange(n),
             "carrier": [f"{a}{b}" for a, b in zip(rng.choice(list("ABCDE"), n),
                                                   rng.choice(list("FGHIJKL"), n))],
             "flight_num": rng.integers(100, 9100, n),
-            "orig": rng.choice(pool, n),
-            "dest": rng.choice(pool, n),
-            "eff_date": day0 + pd.to_timedelta(eff, "D"),
-            "disc_date": day0 + pd.to_timedelta(eff + rng.integers(0, 45, n), "D"),
-            "day_mask": ["".join(m) for m in rng.choice(["0", "1"], (n, 7), p=[0.3, 0.7])],
+            "orig": orig,
+            "dest": dest,
+            "eff_date": eff,
+            "disc_date": eff + pd.Timedelta(days=SPAN_DAYS - 1),
+            "day_mask": ["".join(m) for m in rng.permuted(
+                np.tile(list("1111100"), (n, 1)), axis=1)],
             "dep_time_local": hhmm(),
             "arr_time_local": hhmm(),
-            "seats": np.where(rng.random(n) < 0.04, 0, rng.integers(20, 400, n)),
-            "service_type": np.where(rng.random(n) < 0.09, "F", "J"),
-            "codeshare": rng.random(n) < 0.14,
+            "seats": np.where(kind == "zero_seats", 0, rng.integers(20, 400, n)),
+            "service_type": np.where(kind == "freight", "F", "J"),
+            "codeshare": kind == "codeshare",
         }
     )
     out = sched.copy()
@@ -266,15 +291,18 @@ def write_consume_inputs(out_dir: str, seed: int) -> dict:
 
     ev_dir = os.path.join(out_dir, "events")
     os.makedirs(ev_dir)
-    n_ev = EVENT_FILES * EVENT_ROWS_PER_FILE
-    start = np.datetime64(EVENT_START, "us")
-    span = np.datetime64(EVENT_END, "us") - start
-    ts = start + np.sort(rng.integers(0, span.astype(np.int64), n_ev)).astype(
-        "timedelta64[us]")
+    n_ev = EVENT_ROWS_PER_MONTH * len(MONTHS)
+    ts = np.sort(np.concatenate([
+        np.datetime64(f.date(), "us") + rng.integers(
+            0, f.days_in_month * 86_400_000_000, EVENT_ROWS_PER_MONTH
+        ).astype("timedelta64[us]")
+        for f in first
+    ]))
+    n_files = -(-n_ev // EVENT_ROWS_PER_FILE)
     mtime = 1_700_000_000
-    for f in range(EVENT_FILES):
+    for f in range(n_files):
         rows = slice(f * EVENT_ROWS_PER_FILE, (f + 1) * EVENT_ROWS_PER_FILE)
-        k = EVENT_ROWS_PER_FILE
+        k = len(ts[rows])
         table = pa.table(
             {
                 "event_id": pa.array(np.arange(n_ev)[rows], pa.int64()),
@@ -295,7 +323,7 @@ def write_consume_inputs(out_dir: str, seed: int) -> dict:
         "schedule_rows": n,
         "airport_rows": AIRPORT_ROWS,
         "event_rows": n_ev,
-        "event_files": EVENT_FILES,
+        "event_files": n_files,
         "event_rows_by_month": {m: int(c) for m, c in zip(months, counts)},
         "legs": legs,
     }

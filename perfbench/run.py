@@ -1,17 +1,17 @@
 """End-to-end and per-layer benchmark of the flirt_consume_spark engine.
 
-    python3 perfbench/run.py --workload scan_query --seed 1 --seconds 30 --trace 0
+    python3 perfbench/run.py --workload scan_query --seed 1 --seconds 20 --trace 0
 
 One Spark driver process at ``local[<cores>]`` runs one workload (see
 ``workloads.py`` and ``BENCHMARK.json``) from inputs generated from
-``--seed``. Set-up writes the inputs, starts Spark and runs every
-operation once, untimed and checked, which is also the warm-up: the
-JVM's compiled code still speeds up for tens of seconds after start, and
-the warm-up keeps the steepest part of that out of the timed passes.
-The timed phase then repeats the workload's fixed set of operations a fixed
-number of times (``passes`` in ``workloads.py``), about ``--seconds``
-seconds on a 4-core host; the count does not depend on host speed, so
-every run has the same samples and its tail sits at the same percentile.
+``--seed``. Set-up writes the inputs, starts Spark, runs every
+operation once, untimed and checked, and then runs ``warmup_passes``
+untimed passes: the JVM's compiled code still speeds up for tens of
+seconds after start, and the warm-up keeps the steepest part of that out
+of the timed passes. The timed phase then repeats the workload's fixed
+set of operations a fixed number of times (``passes`` in
+``workloads.py``); the count does not depend on host speed, so every run
+has the same samples and its tail sits at the same percentile.
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` traces every
 second pass and reports the per-layer metrics of the traced passes, with
@@ -239,6 +239,8 @@ def run(args: argparse.Namespace, run_dir: str) -> tuple[dict, dict]:
         ctx = wl.Ctx(spark, run_dir, args.seed, bool(args.trace))
         workload = wl.WORKLOADS[args.workload]()
         inputs = workload.setup(ctx)
+        for _ in range(workload.warmup_passes):
+            workload.run_pass(ctx)
         setup_s = time.perf_counter() - T_START
         passes = timed_passes(workload, ctx, bool(args.trace))
         rss = {"jvm_hwm_mb": vm_hwm_mb(jvm_pid), "python_hwm_mb": vm_hwm_mb("self")}
@@ -267,6 +269,8 @@ def run(args: argparse.Namespace, run_dir: str) -> tuple[dict, dict]:
         "loadavg_start": load_start, "loadavg_end": os.getloadavg(),
         "inputs": inputs, "passes": len(passes),
         "ops_per_pass": len(passes[0]["ops"]),
+        "pass_wall_s": [round(p["wall_s"], 3) for p in passes],
+        "pass_rows_s": [round(p["rows_s"], 3) for p in passes],
         "error_rate": failed / len(ops),
     }
     if args.trace:

@@ -75,20 +75,15 @@ class Tracer:
         """Wrap every public function defined in each module of
         ``layers`` ({span prefix: module}); the span is named
         ``<prefix>.<function>``."""
-        engine_mods = [
-            m for n, m in list(sys.modules.items())
-            if m is not None and (n == ENGINE or n.startswith(ENGINE + "."))
-        ]
+        engine_mods = _engine_modules()
         for prefix, mod in layers.items():
             for attr, fn in inspect.getmembers(mod, inspect.isfunction):
                 if attr.startswith("_") or fn.__module__ != mod.__name__:
                     continue
                 traced = self._wrap(f"{prefix}.{attr}", fn)
-                for other in engine_mods:
-                    for name, value in list(vars(other).items()):
-                        if value is fn:
-                            self._patches.append((other, name, fn))
-                            setattr(other, name, traced)
+                for other, name in _bindings(fn, engine_mods):
+                    self._patches.append((other, name, fn))
+                    setattr(other, name, traced)
 
     def uninstall(self) -> None:
         for mod, name, fn in reversed(self._patches):
@@ -111,6 +106,30 @@ class Tracer:
                     "id": sid, "name": name, "start": start, "end": end,
                     "parent": parent, "op": op, "self_s": selfs[sid],
                 }) + "\n")
+
+
+def _engine_modules() -> list:
+    return [m for n, m in list(sys.modules.items())
+            if m is not None and (n == ENGINE or n.startswith(ENGINE + "."))]
+
+
+def _bindings(fn, modules) -> list[tuple[object, str]]:
+    """Every (module, attribute) of ``modules`` bound to ``fn``."""
+    return [(m, name) for m in modules
+            for name, value in list(vars(m).items()) if value is fn]
+
+
+@contextlib.contextmanager
+def patched(fn, replacement):
+    """Bind ``replacement`` wherever the engine binds ``fn``, for the block."""
+    where = _bindings(fn, _engine_modules())
+    for mod, name in where:
+        setattr(mod, name, replacement)
+    try:
+        yield
+    finally:
+        for mod, name in where:
+            setattr(mod, name, fn)
 
 
 STAGE_FIELDS = {

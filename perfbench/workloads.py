@@ -4,11 +4,12 @@ Each workload has a ``setup`` that writes its seeded inputs, and a
 ``run_pass`` that runs its fixed set of operations once as a closed loop
 with one client: each operation starts after the previous one has
 finished, and its output is checked, untimed. Set-up also runs every
-operation once, checked, as the warm-up: the scan set-up checks every
-key against DuckDB, and the consume set-up runs one untimed pass. The CacheManager is cleared before
-every operation, so every timed operation computes from the inputs.
+operation once, checked: the scan set-up checks every key against
+DuckDB, and the consume set-up runs its first pass. ``warmup_passes``
+untimed passes follow set-up. The CacheManager is cleared before every
+operation, so every timed operation computes from the inputs.
 ``passes`` is the fixed number of timed passes: enough latency samples
-that the tail, the sample with ten beyond it, sits near p75-p80.
+that the tail, the sample with ten beyond it, sits at p75 or above.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import traceback
 
 import duckdb
 import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from flirt_consume_spark import io as fio
@@ -61,13 +63,15 @@ LAYERS = {
     },
 }
 
-#: One key from each of the registry modules relational, shapes,
-#: tpch_tail, windows, scalar, temporal and analytics (68 keys in all).
-#: Where a module has keys that call the operators layer, the key is one
-#: of those, so that layer is measured too.
+#: Eight of the 68 keys of the registry modules relational, shapes,
+#: tpch_tail, windows, scalar, temporal and analytics, at least one per
+#: module, taken from each module's cheaper keys: the workload measures
+#: per-call fixed cost. Where a module's keys call the operators layer,
+#: the key is one of those, so that layer is measured too.
 SCAN_KEYS = (
-    "sort_global", "shape_large_orders", "shape_potential_promotion",
-    "win_ntile", "array_ops", "time_normalize", "profile_table",
+    "sort_global", "filter_predicates", "shape_priority_shipping",
+    "shape_forecast_revenue", "win_rolling", "array_ops", "time_normalize",
+    "profile_table",
 )
 
 
@@ -121,7 +125,8 @@ class Ctx:
 class ScanWorkload:
     """Registry keys: build (``spec.fn``) then execute (noop write)."""
 
-    passes = 6
+    warmup_passes = 3
+    passes = 5
 
     def __init__(self) -> None:
         self.rows: dict[str, int] = {}
@@ -131,17 +136,27 @@ class ScanWorkload:
         self.sf_dir = os.path.join(ctx.run_dir, "tables")
         datagen.write_tables(self.sf_dir, int(ctx.rng.integers(2**31)))
         con = duck_connect(self.sf_dir)
+        loaded: list[str] = []
+
+        def load_table(spark, sf_dir, name):
+            loaded.append(name)
+            return real_load_table(spark, sf_dir, name)
+
+        real_load_table = fio.load_table
         try:
             for key in SCAN_KEYS:
                 ctx.spark.catalog.clearCache()
+                loaded.clear()
                 try:
-                    res = check_key(ctx.spark, con, REGISTRY[key], self.sf_dir)
+                    with tracing.patched(real_load_table, load_table):
+                        res = check_key(ctx.spark, con, REGISTRY[key], self.sf_dir)
                 except Exception:  # noqa: BLE001 - a failing key is a result
                     res = {"status": "EXCEPTION", "error": traceback.format_exc()}
                 if res["status"] not in ("OK", "ROWS_ONLY"):
                     self.wrong.add(key)
                     _log(f"check failed: {key}: {res}")
-                self.rows[key] = res.get("rows", 0)
+                self.rows[key] = sum(pq.read_metadata(os.path.join(
+                    self.sf_dir, f"{t}.parquet")).num_rows for t in loaded)
         finally:
             con.close()
         return {"keys": len(SCAN_KEYS), "table_rows": datagen.ROWS}
@@ -175,8 +190,8 @@ class ScanWorkload:
             "ops": ops,
             "samples": [o["s"] for o in ops],
             "wall_s": wall,
-            # Nothing is ingested here: the rows the keys return, per
-            # second of the pass.
+            # Table rows the keys load through io.load_table, per second
+            # of the pass.
             "rows": sum(self.rows[k] for k in order),
             "rows_s": wall,
         }
@@ -199,8 +214,9 @@ class ConsumeWorkload:
     stream into month-partitioned sinks, then serve destination
     distributions from the legs sink."""
 
-    LOOKUPS = 14
-    passes = 3
+    LOOKUPS = 10
+    warmup_passes = 1
+    passes = 4
     REDO_MONTHS = 2
 
     def setup(self, ctx: Ctx) -> dict:
@@ -229,7 +245,7 @@ class ConsumeWorkload:
             ))
         self.duck = duckdb.connect()
         self.pass_no = 0
-        self.run_pass(ctx)  # warm-up, untimed
+        self.run_pass(ctx)  # first pass, untimed
         return {
             **info,
             "legs": len(legs),
@@ -294,9 +310,22 @@ class ConsumeWorkload:
         fio.write_partitioned(legs, legs_path, ("month_key",))
         fio.write_partitioned(legs.filter(F.col("month_key").isin(self.redo)),
                               legs_path, ("month_key",))
+        events_path = os.path.join(out, "events")
+
+        def append_batch(batch, _batch_id: int) -> None:
+            fio.write_partitioned(fio.with_month_key(batch, "ts"), events_path,
+                                  ("month_key",), mode="append")
+
+        # Not jobs.write_monthly_sink: it dynamic-overwrites each
+        # micro-batch's months, so when a month's events span two
+        # triggers the later batch erases the earlier batch's rows. This
+        # append sink keeps them, and _check_sinks holds it to every event.
         events = jobs.read_events_stream(spark, os.path.join(self.src, "events"))
-        jobs.write_monthly_sink(events, os.path.join(out, "events"),
-                                os.path.join(out, "checkpoint"))
+        (events.writeStream.foreachBatch(append_batch)
+         .option("checkpointLocation", os.path.join(out, "checkpoint"))
+         .trigger(availableNow=True)
+         .start()
+         .awaitTermination())
 
     def _month_counts(self, path: str) -> dict[str, int]:
         return dict(self.duck.execute(
